@@ -26,6 +26,15 @@ object GraftSession {
       // core while LARGE inputs still cap at maxPartitionBytes — the
       // 100 TB plan shape is unchanged.
       .config("spark.sql.files.openCostInBytes", (64 * 1024).toString)
+      // Plan descriptions are capped at 16 MB. A cached frame's plan prints
+      // its whole cached sub-plan wherever it is referenced, so a frame
+      // built over several rounds of un-checkpointed cached rounds grows
+      // multiplicatively (measured: 0.18 → 6.6 → 316 MB over three crawl
+      // rounds that cache each next frontier without a checkpoint), and
+      // AQE renders the full description on every plan update — a
+      // driver OOM with no use to anyone. Plans of any real query, and
+      // every PlanAudit plan, are far below the cap.
+      .config("spark.sql.maxPlanStringLength", (16 << 20).toString)
     // Profiling hook: SPARK_GRAFT_EVENTLOG=<dir> writes the Spark event
     // log there (stage timings + callsites — the forked-run substitute for
     // a live UI in this sandbox). Off by default: it adds listener-bus

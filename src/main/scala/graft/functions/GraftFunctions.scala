@@ -226,6 +226,12 @@ object Kernels {
   def urlHost(s: UTF8String): UTF8String =
     UTF8String.fromString(UrlNormalizer.host(s.toString))
   def urlIsValid(s: UTF8String): Boolean = UrlNormalizer.isValid(s.toString)
+  private val noUrl: ArrayData = new GenericArrayData(Array.empty[Any])
+  def urlCanon(s: UTF8String): ArrayData = {
+    val n = UrlNormalizer.normalize(s.toString)
+    if (UrlNormalizer.isValid(n)) new GenericArrayData(Array[Any](UTF8String.fromString(n)))
+    else noUrl
+  }
   def sha1Base32(b: Array[Byte]): UTF8String = UTF8String.fromString(Digests.sha1Base32(b))
   def sha256Base32(b: Array[Byte]): UTF8String = UTF8String.fromString(Digests.sha256Base32(b))
   def gunzip(b: Array[Byte]): Array[Byte] = HttpCodec.gunzip(b)
@@ -348,6 +354,19 @@ case class UrlNormalize(child: Expression) extends KernelUnary {
   override def nullSafeEval(v: Any): Any = Kernels.urlNormalize(v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): UrlNormalize = copy(child = c)
   override def prettyName: String = "url_normalize"
+}
+
+/** Normalize and validate in one kernel call: `[url_normalize(url)]` when
+  * that is a valid http(s) url, else `[]` — the frontier explodes it, so
+  * each url is normalized once per row. Elements are null exactly when the
+  * input can be, which keeps an exploded column's nullability equal to
+  * `url_normalize`'s. */
+case class UrlCanon(child: Expression) extends KernelUnary {
+  override def dataType: DataType = ArrayType(StringType, containsNull = child.nullable)
+  override protected def kernelCall = "graft.functions.Kernels.urlCanon(%s)"
+  override def nullSafeEval(v: Any): Any = Kernels.urlCanon(v.asInstanceOf[UTF8String])
+  override protected def withNewChildInternal(c: Expression): UrlCanon = copy(child = c)
+  override def prettyName: String = "url_canon"
 }
 
 case class UrlHost(child: Expression) extends KernelUnary {
@@ -748,6 +767,7 @@ object GraftFunctions {
   def url_normalize(c: Column): Column = col(UrlNormalize(expr(c)))
   def url_host(c: Column): Column = col(UrlHost(expr(c)))
   def url_is_valid(c: Column): Column = col(UrlIsValid(expr(c)))
+  def url_canon(c: Column): Column = col(UrlCanon(expr(c)))
 
   /** SURT (Sort-friendly URI Reordering Transform) key — the canonical key
     * real web-archive CDX indexes sort by: host labels reversed and

@@ -52,12 +52,20 @@ object Frontier {
       maxBudgetHint: Int = 0)
 
   /** Stage 1 — canonicalize: dirty url → RFC-3986 normal form, host,
-    * xxhash64 identity. Runs inside one whole-stage-codegen span (all
-    * expressions are native, incl. the custom url_* ones). */
+    * xxhash64 identity; rows whose normal form is not a valid http(s) url
+    * drop out. Runs inside one whole-stage-codegen span (all expressions
+    * are native, incl. the custom url_* ones).
+    *
+    * The normal form is the explode of `url_canon` (a 0/1-element array),
+    * so the kernel runs once per row. A filter on a projected
+    * `url_normalize` column would not: predicate pushdown inlines the
+    * alias into every pushed predicate (validity, the seen probe's
+    * partition and hash), and FilterExec has no common-subexpression
+    * elimination. Predicates on a generator's output stay above the
+    * Generate, so downstream filters reuse the one value. */
   def canonicalize(pages: DataFrame): DataFrame =
     pages
-      .withColumn("url_norm", url_normalize(col("url")))
-      .filter(url_is_valid(col("url_norm")))
+      .withColumn("url_norm", explode(url_canon(col("url"))))
       .withColumn("host", url_host(col("url_norm")))
       .withColumn("url_hash", xxhash64(col("url_norm")))
 
@@ -73,11 +81,12 @@ object Frontier {
     * exact left-anti join (Catalyst picks the join strategy; AQE handles
     * skew). This is the small-state path. The scale path — the north_star's
     * 10^10-url seen set — is `graft.state.SeenStore.filterUnseen`:
-    * per-partition sketches (Bloom / cuckoo `TypedImperativeAggregate`)
-    * built and loaded entirely executor-side, probed inside whole-stage
-    * codegen, backed by an exact anti-join over the sketch maybes; driver
-    * memory stays O(1) in |seen|. A driver-built global Bloom is
-    * deliberately absent: at 10^10 urls / fpp 0.01 it is a ~12 GB bitset. */
+    * per-partition sketches (Bloom / cuckoo) built and loaded entirely
+    * executor-side, probed inside whole-stage codegen, where a sketch
+    * maybe is settled by a binary search of the partition's sorted-hash
+    * sidecar — exact, with no join; driver memory stays O(1) in |seen|.
+    * A driver-built global Bloom is deliberately absent: at 10^10 urls /
+    * fpp 0.01 it is a ~12 GB bitset. */
   def dedupeAgainstSeen(candidates: DataFrame, seen: Option[DataFrame], cfg: Config): DataFrame =
     seen match {
       case None => candidates

@@ -2,8 +2,8 @@ package graft.state
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, BloomFilterAggregate, Complete, TypedImperativeAggregate}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, TypedImperativeAggregate}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DataType}
@@ -16,26 +16,37 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *
   * Layout under `dir`:
   * {{{
-  *   store.json                       parts / fpp / sketch config (fixed at creation)
-  *   inc-<id>/data/seen_part=<p>/…    parquet url_hash increments (append-only)
-  *   inc-<id>/sketch/p-<p>.<type>     per-partition sketch blob (bloom | cuckoo)
-  *   compact-<g>/sketch/p-<p>.<type>  merged bank: all increments ≤ upTo in one sketch+sidecar
-  *   manifest/inc-<id>.json           commit marker (atomic rename)
-  *   manifest/compact-<g>.json        compaction commit marker {gen, upTo}
+  *   store.json                        parts / fpp / sketch config (fixed at creation)
+  *   inc-<id>/data/seen_part=<p>/…     parquet url_hash increments (append-only)
+  *   inc-<id>/sketch/p-<p>.<type>      per-partition sketch blob (bloom | cuckoo)
+  *   inc-<id>/sketch/p-<p>.hashes      per-partition sorted int64 sidecar (exact state)
+  *   compact-<g>/sketch/p-<p>.*        merged bank: all increments ≤ upTo in one sketch+sidecar
+  *   manifest/inc-<id>.json            commit marker (atomic rename)
+  *   manifest/compact-<g>.json         compaction commit marker {gen, upTo}
   * }}}
   *
   * Scale properties:
-  *  - sketches are built by executors (`bloom_filter_agg` / the cuckoo
-  *    `TypedImperativeAggregate` grouped on `seen_part`) and written by
-  *    executors — the driver never materializes any sketch;
-  *  - the probe runs inside whole-stage codegen: candidates are exchanged
-  *    once on `seen_part`, each task lazily loads only its partitions'
-  *    sketches (|seen|/parts bytes each) from shared storage;
+  *  - one-pass build: `append` repartitions the increment on `seen_part`
+  *    and a single `foreachPartition` sorts each partition's hashes once,
+  *    writes the sorted sidecar, and builds a right-sized sketch from the
+  *    same array — executor-side; the driver never materializes a sketch;
+  *  - size-gated direct probe: when the probe-visible banks fit
+  *    `spark.graft.seenstore.directProbeMaxBytes` (byte string, default
+  *    1g) the probe is a narrow codegen filter over the candidates' own
+  *    partitioning — zero exchange; past the gate candidates exchange once
+  *    on `__seen_part` so each task loads only its partitions' slices;
+  *  - exact membership without a join: a sketch "maybe" falls through to a
+  *    binary search of the partition's sorted sidecar, so the filter has
+  *    no false positives and no second pass over the candidates;
+  *  - once-per-JVM loads: every task's copy of the probe resolves to the
+  *    JVM-wide [[SketchResolver]] for its bank list, so each (bank,
+  *    partition) blob is read once per executor, not once per task; a
+  *    newer bank list of the same store supersedes the cached one, so a
+  *    long crawl pins one store's state, not one copy per round;
   *  - commits are O(|increment|): no rewrite of the accumulated seen set
   *    (the reference's analog is its append-only `sync.Map` registration,
-  *    /root/reference/dialer.go:401-410);
-  *  - sketch false positives fall through to an exact left-anti join against
-  *    the increment parquet, so the filter is exact.
+  *    `dialer.go:401-410`); `compact` keeps the per-row probe at O(1)
+  *    banks however many rounds committed.
   */
 object SeenStore {
 
@@ -295,7 +306,8 @@ object SeenStore {
       *
       * Routing is SIZE-ADAPTIVE (the broadcast-join decision applied to
       * seen state): when the probe-visible banks' on-disk footprint fits
-      * `spark.graft.seenstore.directProbeMaxBytes` (default 1 GiB), the
+      * `spark.graft.seenstore.directProbeMaxBytes` (a byte string such as
+      * "512m"; default 1g), the
       * probe runs DIRECTLY over the candidates' existing partitioning —
       * zero exchange — and each executor lazily loads the whole bank set
       * once (a JVM-wide resolver cache de-duplicates loads across tasks).
@@ -311,15 +323,15 @@ object SeenStore {
       if (ids.isEmpty) return Filtered(candidates, () => ())
       val cfg = config
       val banks = probeBanks(ids)
-      val directMax = candidates.sparkSession.conf
-        .get("spark.graft.seenstore.directProbeMaxBytes", (1L << 30).toString).toLong
+      val directMax = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        candidates.sparkSession.conf.get("spark.graft.seenstore.directProbeMaxBytes", "1g"))
       val withPart = candidates
         .withColumn("__seen_part", pmod(col("url_hash"), lit(cfg.parts)).cast("int"))
       val routed =
         if (probeStateBytes(banks) <= directMax) withPart
         else withPart.repartition(col("__seen_part"))
       val out = routed
-        .filter(!seenContains(col("__seen_part"), col("url_hash"), banks, cfg.parts))
+        .filter(!seenContains(col("__seen_part"), col("url_hash"), dir, banks, cfg.parts))
         .drop("__seen_part")
       Filtered(out, () => ())
     }
@@ -335,22 +347,15 @@ object SeenStore {
 
   import org.apache.spark.sql.graft.Bridge
 
-  /** Spark's own BloomFilterAggregate (a TypedImperativeAggregate) grouped
-    * per seen_part — the executor-side Bloom build. */
-  def bloomAgg(child: Column, expectedItems: Long, fpp: Double): Column = {
-    val bits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(expectedItems, fpp)
-    Bridge.column(new BloomFilterAggregate(Bridge.expression(child),
-      Literal(expectedItems), Literal(bits), 0, 0)
-      .toAggregateExpression())
-  }
-
   /** The cuckoo-filter TypedImperativeAggregate (north_star state sketch). */
   def cuckooAgg(child: Column, capacity: Long): Column =
     Bridge.column(AggregateExpression(
       CuckooFilterAggregate(Bridge.expression(child), capacity), Complete, isDistinct = false))
 
-  def seenContains(part: Column, hash: Column, banks: Seq[String], parts: Int): Column =
-    Bridge.column(SeenContains(Bridge.expression(part), Bridge.expression(hash), banks, parts))
+  def seenContains(part: Column, hash: Column, store: String, banks: Seq[String],
+                   parts: Int): Column =
+    Bridge.column(SeenContains(Bridge.expression(part), Bridge.expression(hash),
+      store, banks, parts))
 }
 
 /** Builds a [[CuckooFilter]] over a LONG column — same shape as Spark's
@@ -386,18 +391,18 @@ case class CuckooFilterAggregate(
 /** Codegen EXACT membership probe against the store's per-partition state:
   * sketch first (fast definite-no), then a binary search of the
   * partition's sorted-hash sidecar. The per-row path is allocation-free
-  * and lock-free (indexed AtomicReferenceArrays — no string keys, no LRU
-  * lock shared by 32 task threads); the exact arrays load lazily, only for
-  * partitions where a sketch ever says maybe. */
+  * and, once a slot is loaded, lock-free (indexed AtomicReferenceArrays —
+  * no string keys, no LRU lock shared by task threads); the exact arrays
+  * load lazily, only for partitions where a sketch ever says maybe. */
 case class SeenContains(left: Expression, right: Expression,
-                        banks: Seq[String], parts: Int)
+                        store: String, banks: Seq[String], parts: Int)
     extends BinaryExpression {
-  // JVM-shared resolver (SketchResolver.forBanks): tasks deserialize their
-  // own copy of this expression, so a per-expression resolver would reload
-  // every touched bank per TASK — the shared cache loads each (bank,
-  // partition) blob once per executor instead (required for the direct
-  // probe, where every task touches every partition)
-  @transient private lazy val resolver = SketchResolver.forBanks(banks, parts)
+  // the JVM-wide resolver for this bank list. The generated code's
+  // reference to it is serialized into every task's closure; deserializing
+  // that copy lands back on the shared instance (SketchResolver's
+  // readResolve), so each (bank, partition) blob loads once per executor
+  // on both the codegen and the interpreted path
+  @transient private lazy val resolver = SketchResolver.forBanks(store, banks, parts)
   override def dataType: DataType = org.apache.spark.sql.types.BooleanType
   override def nullSafeEval(part: Any, hash: Any): Any =
     resolver.contains(part.asInstanceOf[Int], hash.asInstanceOf[Long])
@@ -410,51 +415,81 @@ case class SeenContains(left: Expression, right: Expression,
   override def prettyName: String = "seen_contains"
 }
 
-/** One resolver per probe expression: lazily loads each (bank, partition)
-  * sketch/state blob once per JVM slot, lock-free reads thereafter. A bank
-  * is a sketch directory — a compacted generation or a post-compaction
-  * increment — so the per-row loop is O(active banks), O(1) after
-  * `Store.compact()`, independent of how many crawl rounds ever committed.
-  * A task only ever touches the partitions routed to it, so executor
-  * memory is O(|seen|/parts × parts-touched), and the driver holds
-  * nothing. */
+/** The JVM-wide resolver cache: one resolver per store, for the store's
+  * newest probed bank list. A bank is a sketch directory — a compacted
+  * generation or a post-compaction increment — so the per-row loop is
+  * O(active banks), O(1) after `Store.compact()`, independent of how many
+  * crawl rounds ever committed. In a routed probe a task only touches the
+  * partitions routed to it, so executor memory is O(|seen|/parts ×
+  * parts-touched); the driver holds nothing it did not probe itself. */
 object SketchResolver {
-  // Keyed on the bank PATH LIST: banks are immutable once probe-visible
-  // (increments commit-then-never-rewrite; compactions are new gen dirs),
-  // so a path list uniquely identifies contents. Bounded: evicting by
-  // clear() is always safe — resolvers reload lazily on demand.
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(Seq[String], Int), SketchResolver]()
-  def forBanks(banks: Seq[String], parts: Int): SketchResolver = {
-    if (cache.size > 64) cache.clear()
-    cache.computeIfAbsent((banks, parts),
-      { k => new SketchResolver(k._1.toArray, k._2) })
-  }
+  // stores pinned at once; probing a further store drops the least
+  // recently used one (it reloads lazily if probed again)
+  private val MaxStores = 16
+  // Keyed on the STORE, not the bank list: every crawl round probes a new
+  // list (one more increment, or a fresh compaction), and a list keyed
+  // cache would pin a copy of the store's state per round. Banks are
+  // immutable once probe-visible, so a (banks, parts) match is a content
+  // match; a different list for the same store replaces the cached one,
+  // and tasks still holding the old resolver finish with it.
+  private val byStore =
+    new java.util.LinkedHashMap[String, SketchResolver](MaxStores * 2, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, SketchResolver]): Boolean =
+        size > MaxStores
+    }
+
+  def forBanks(store: String, banks: Seq[String], parts: Int): SketchResolver =
+    byStore.synchronized {
+      val r = byStore.get(store)
+      if (r != null && r.parts == parts && r.banks.sameElements(banks)) r
+      else {
+        val fresh = new SketchResolver(store, banks.toArray, parts)
+        byStore.put(store, fresh)
+        fresh
+      }
+    }
+
+  /** Resolvers currently pinned in this JVM. */
+  private[state] def pinned: Int = byStore.synchronized(byStore.size)
 }
 
-final class SketchResolver(banks: Array[String], parts: Int) extends Serializable {
+final class SketchResolver(val store: String, val banks: Array[String], val parts: Int)
+    extends Serializable {
   @transient private lazy val probes =
     new java.util.concurrent.atomic.AtomicReferenceArray[SketchBank.Probe](banks.length * parts)
   @transient private lazy val exact =
     new java.util.concurrent.atomic.AtomicReferenceArray[Array[Long]](banks.length * parts)
+  // one lock per (bank, partition) slot, taken only on a slot's first
+  // touch: concurrent tasks wait for the one read instead of each reading
+  @transient private lazy val locks = Array.fill(banks.length * parts)(new Object)
+
+  // a task's deserialized copy resolves to the JVM-wide instance, whose
+  // loaded arrays every task of the executor shares
+  private def readResolve(): AnyRef = SketchResolver.forBanks(store, banks.toSeq, parts)
+
+  private def loadProbe(idx: Int, bank: Int, part: Int): SketchBank.Probe =
+    locks(idx).synchronized {
+      if (probes.get(idx) == null) probes.set(idx, SketchBank.load(s"${banks(bank)}/p-$part"))
+      probes.get(idx)
+    }
+
+  private def loadExact(idx: Int, bank: Int, part: Int): Array[Long] =
+    locks(idx).synchronized {
+      if (exact.get(idx) == null)
+        exact.set(idx, SketchBank.loadHashes(s"${banks(bank)}/p-$part.hashes"))
+      exact.get(idx)
+    }
 
   def contains(part: Int, hash: Long): Boolean = {
     var i = 0
     while (i < banks.length) {
       val idx = i * parts + part
       var p = probes.get(idx)
-      if (p == null) {
-        probes.compareAndSet(idx, null, SketchBank.load(s"${banks(i)}/p-$part"))
-        p = probes.get(idx)
-      }
+      if (p == null) p = loadProbe(idx, i, part)
       if (p.mightContain(hash)) {
         // sketch maybe → exact sorted-hash state decides (no false positives)
         var arr = exact.get(idx)
-        if (arr == null) {
-          exact.compareAndSet(idx, null,
-            SketchBank.loadHashes(s"${banks(i)}/p-$part.hashes"))
-          arr = exact.get(idx)
-        }
+        if (arr == null) arr = loadExact(idx, i, part)
         if (java.util.Arrays.binarySearch(arr, hash) >= 0) return true
       }
       i += 1
@@ -465,6 +500,9 @@ final class SketchResolver(banks: Array[String], parts: Int) extends Serializabl
 
 /** Sketch-blob loader (cold path only — resolvers cache the result). */
 object SketchBank {
+  /** Sketch and sidecar files read in this JVM. */
+  private[state] val loads = new java.util.concurrent.atomic.AtomicLong()
+
   private[state] trait Probe { def mightContain(h: Long): Boolean }
   private object Absent extends Probe { def mightContain(h: Long) = false }
   private final class Bloom(b: org.apache.spark.util.sketch.BloomFilter) extends Probe {
@@ -511,6 +549,7 @@ object SketchBank {
 
   /** Sorted int64 state sidecar; absent file → empty array. */
   private[state] def loadHashes(path: String): Array[Long] = {
+    loads.incrementAndGet()
     val conf = new org.apache.hadoop.conf.Configuration()
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
@@ -527,6 +566,7 @@ object SketchBank {
   }
 
   private[state] def load(prefix: String): Probe = {
+    loads.incrementAndGet()
     val conf = new org.apache.hadoop.conf.Configuration()
     def bytesOf(p: org.apache.hadoop.fs.Path): Option[Array[Byte]] = {
       val fs = p.getFileSystem(conf)

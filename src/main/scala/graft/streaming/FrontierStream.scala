@@ -31,11 +31,7 @@ object FrontierStream {
     * the groupBy key — the streaming twin of the seen-set table). */
   def dedupedUrls(spark: SparkSession, pages: DataFrame): Dataset[UrlEvent] = {
     import spark.implicits._
-    val canonical = pages
-      .withColumn("url_norm", url_normalize(col("url")))
-      .filter(url_is_valid(col("url_norm")))
-      .withColumn("host", url_host(col("url_norm")))
-      .withColumn("url_hash", xxhash64(col("url_norm")))
+    val canonical = graft.operators.Frontier.canonicalize(pages)
       .select("url_hash", "url_norm", "host", "warc_ts")
       .as[UrlEvent]
     canonical

@@ -295,9 +295,10 @@ object PlanAudit {
         exchangesCarryNoPayload(p)),
 
     Audit("bench_headline_schedule",
-      "the BENCH frontier path: DIRECT seen_contains probe (zero probe exchange — state under the size gate) + single host exchange with WindowGroupLimit Partial map-side prune (salted pre-rank off)",
+      "the BENCH frontier path: url normalized ONCE per row (one url_canon generator, no url_normalize re-inlined into the pushed validity and probe predicates) + DIRECT seen_contains probe (zero probe exchange — state under the size gate) + single host exchange with WindowGroupLimit Partial map-side prune (salted pre-rank off)",
       (s, _) => benchHeadlineSchedule(s),
-      p => common(p) ++ has(p, "seen_contains") ++
+      p => common(p) ++ eq(p, "url_canon(", 1) ++ eq(p, "url_normalize(", 0) ++
+        has(p, "seen_contains") ++
         hasNo(p, "Exchange hashpartitioning(__seen_part") ++
         eq(p, "Exchange hashpartitioning", 1) ++ atLeast(p, ", Partial", 1)),
   )

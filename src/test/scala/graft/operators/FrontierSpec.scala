@@ -150,6 +150,31 @@ class FrontierSpec extends AnyFunSuite {
     }
   }
 
+  test("canonicalize: one url_canon per row, rows and schema equal to normalize + validity filter") {
+    import graft.functions.GraftFunctions._
+    def reference(df: org.apache.spark.sql.DataFrame) = df
+      .withColumn("url_norm", url_normalize(col("url")))
+      .filter(url_is_valid(col("url_norm")))
+      .withColumn("host", url_host(col("url_norm")))
+      .withColumn("url_hash", xxhash64(col("url_norm")))
+    val raw = Seq("HTTP://Example.COM:80/a/./b/../c?q=%7e", " https://h.example./x ",
+      "ftp://h.example/f", "http:///nohost", "not a url", "", null,
+      "https://user@h.example:8443/%2a?", "mailto:a@b.example", "http://h.example/a#frag")
+    val nullable = raw.zipWithIndex.toDF("url", "depth")
+    val nonNull = spark.range(3).select(concat(lit("http://H.example/"), col("id").cast("string"))
+      .as("url"))
+    for (df <- Seq(nullable, nonNull)) {
+      val got = Frontier.canonicalize(df)
+      val want = reference(df)
+      assert(got.schema == want.schema, s"${got.schema.treeString} vs ${want.schema.treeString}")
+      assert(got.collect().toSeq.map(_.toString).sorted == want.collect().toSeq.map(_.toString).sorted)
+    }
+    val expected = raw.filter(u => u != null && UrlNormalizer.isValid(UrlNormalizer.normalize(u)))
+      .map(UrlNormalizer.normalize)
+    assert(Frontier.canonicalize(nullable).select("url_norm").as[String].collect().toSeq.sorted ==
+      expected.sorted)
+  }
+
   test("extracted text is byte-identical to the pages' text column") {
     import graft.functions.GraftFunctions._
     val bad = pagesDf

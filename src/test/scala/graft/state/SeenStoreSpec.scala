@@ -206,6 +206,44 @@ class SeenStoreSpec extends AnyFunSuite {
         "state past the gate must route candidates to their seen partition")
       val routedRows = routed.orderBy("url_hash").collect().map(_.getLong(0)).toSeq
       assert(routedRows == directRows, "probe routing must never change the result")
+      // the gate is a byte string, like Spark's own size confs
+      spark.conf.set(confKey, "1g")
+      assert(!store.filterUnseen(candidates).result.queryExecution.executedPlan.toString
+        .contains("Exchange hashpartitioning(__seen_part"), "state under 1g must probe directly")
     } finally spark.conf.unset(confKey)
+  }
+
+  test("probe loads each (bank, partition) sketch and sidecar once per JVM, across tasks and passes") {
+    val dir = Files.createTempDirectory("graft-seen-loads").toString
+    val parts = 4
+    val store = SeenStore(dir, SeenStore.Config(parts = parts))
+    def hashes(lo: Long, hi: Long) =
+      spark.range(lo, hi, 1, 8).select(xxhash64(col("id")).as("url_hash"))
+    store.append(hashes(0, 4000), 0L)
+    store.append(hashes(4000, 6000), 1L)
+    val banks = store.probeBanks(store.committedIds).length
+    assert(banks == 2)
+    val before = SketchBank.loads.get
+    // 8 candidate tasks on 4 cores, twice: every task probes every
+    // partition of both banks, and both banks hold hits in every partition
+    (1 to 2).foreach(_ => assert(store.filterUnseen(hashes(0, 12000)).result.count() == 6000L))
+    val loads = SketchBank.loads.get - before
+    assert(loads == 2L * banks * parts,
+      s"$loads sketch/sidecar loads, want one sketch and one sidecar per (bank, partition)")
+  }
+
+  test("resolver cache: a store pins one resolver however many rounds probe it") {
+    val dir = Files.createTempDirectory("graft-seen-rounds").toString
+    val store = SeenStore(dir, SeenStore.Config(parts = 4))
+    val pinned = (0 until 6).map { r =>
+      store.append(spark.range(r * 1000L, (r + 1) * 1000L)
+        .select(xxhash64(col("id")).as("url_hash")), r.toLong)
+      // each round probes a new bank list: one more increment, or a compaction
+      if (r % 2 == 1) store.compact(spark)
+      val cand = spark.range(0, (r + 2) * 1000L, 1, 4).select(xxhash64(col("id")).as("url_hash"))
+      assert(store.filterUnseen(cand).result.count() == 1000L)
+      SketchResolver.pinned
+    }
+    assert(pinned.distinct.size == 1, s"pinned resolvers per round: ${pinned.mkString(",")}")
   }
 }
